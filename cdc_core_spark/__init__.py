@@ -11,8 +11,8 @@ idiomatic Spark design:
   the version tuple ``(op_ts, event_seq)`` (reference: per-key single-threaded
   sharded executors, core/.../executor/BaseShardedExecutor.java:137-209, and
   ``version() == updatedTime`` LWW, persistence/.../model/BaseEntity.java:125-128);
-* keyed INSERT/UPDATE/DELETE upserts become a bucket-pruned copy-on-write
-  MERGE into an atomic-snapshot parquet table (reference: keyed
+* keyed INSERT/UPDATE/DELETE upserts become merge-on-read delta files of
+  per-key winners in an atomic-snapshot parquet table (reference: keyed
   create/update/upsert/delete, persistence/.../AbstractDataStore.java:140-226,
   and the atomic temp-file → commit writer, filesystem/.../Writer.java:43-127);
 * exactly-once is enforced with idempotent commit manifests keyed

@@ -10,7 +10,7 @@ equivalent is a driver epoch loop:
         split schema ops (op 0/1/2) → registry → metadata-only evolution
         split malformed → quarantine table              (DLQ, MessageProcessor.sendError)
         LWW-reduce valid events to per-key winners      (sharded-executor analog)
-        bucket-pruned copy-on-write MERGE into target   (keyed upsert/delete)
+        stage winners as bucket-tagged delta files      (merge-on-read upsert/delete)
         atomically commit snapshot + per-partition manifests  (exactly-once)
 
 Idempotence: re-running an epoch is a no-op — winners carry the same version
@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from cdc_core_spark import fsutil
 from cdc_core_spark.lake import (SnapshotTable, bucket_expr,
                                  field_projection, sql_type)
-from cdc_core_spark.lww import lww_reduce, lww_reduce_in_partition
+from cdc_core_spark.lww import lww_reduce
 from cdc_core_spark.registry import SchemaDef, SchemaRegistry, validate_evolution
 
 OP_INSERT, OP_UPDATE, OP_DELETE = 3, 4, 5
@@ -138,7 +138,7 @@ def _error_reason(key_cols: list[str] = ("repo", "path")):
 class CdcEngine:
     def __init__(self, spark: SparkSession, root: str, registry: SchemaRegistry,
                  entity: str = "source_repos", n_buckets: int = 16,
-                 salt: int | str | None = None, merge_mode: str | None = None,
+                 salt: int | str | None = None,
                  sort_order: list[str] | None = None,
                  zorder: list[str] | None = None,
                  bloom_filters: list[str] | None = None):
@@ -180,17 +180,6 @@ class CdcEngine:
         if salt is not None and not isinstance(salt, int) and salt != "auto":
             raise ValueError(f"salt must be an int, None or 'auto', got {salt!r}")
         self.salt = salt
-        # "mor" (merge-on-read deltas, default) | "cow-jvm" | "cow-arrow".
-        # Validated HERE: an unrecognized value (a typo'd env var) would
-        # otherwise silently fall through apply_epoch's mode checks into a
-        # copy-on-write rewrite per epoch — a confusing failure far from
-        # the actual mistake
-        self.merge_mode = merge_mode or os.environ.get("CDC_MERGE_STRATEGY", "mor")
-        if self.merge_mode not in ("mor", "cow-jvm", "cow-arrow"):
-            raise ValueError(
-                f"unknown merge_mode {self.merge_mode!r} (from the "
-                "merge_mode argument or CDC_MERGE_STRATEGY): expected "
-                "'mor', 'cow-jvm' or 'cow-arrow'")
         self.table = SnapshotTable(os.path.join(root, "target"))
         self.errors_dir = os.path.join(root, "errors")
         # sort_order is recorded at CREATION — on an existing table it
@@ -378,24 +367,26 @@ class CdcEngine:
         """Process one epoch end-to-end and atomically commit. Returns the
         manifest rows written (one per touched storage bucket = partition_id).
 
-        The replay loop passes pre-collected ``err_stats`` (per-bucket
-        malformed counts) and ``schema_rows`` (in-band DDL events); without
-        ``read_stats`` the epoch then costs two Spark jobs: (1) materialize
-        the LWW winners (which carry their own lineage stats —
-        ``with_stats``), and (2) the single-shuffle merge+write. Direct
-        callers (tests, streaming) may omit them and pay the per-epoch scans
-        instead.
+        Every epoch commits merge-on-read: the LWW winners are staged as
+        bucket-tagged DELTA files — O(epoch) write, no table rewrite; reads
+        LWW-fold base+deltas and ``compact()`` re-bases. DELETE winners
+        become tombstone rows so they keep out-versioning late duplicate
+        redeliveries of older events (exactly-once under at-least-once
+        delivery).
 
-        ``read_stats`` (per-bucket valid-event counts, precomputed by the
-        replay loop in one count-only job for ALL epochs) upgrades the
-        merge-on-read path to exactly ONE Spark job per epoch: the remaining
-        manifest stats — events_applied, (max_op_ts, max_event_seq)
-        watermark — are read from the staged parquet FOOTERS of the delta
-        write itself (num_rows + column min/max statistics), so the separate
-        winners-materialize job disappears. Values are identical to the
-        two-job path: every valid event folds into its key's winner, and the
-        winner's ``_max_seq``/``_op_ts`` maxima per bucket are exactly the
-        footer maxima of the staged columns."""
+        The replay loop passes pre-collected ``schema_rows`` (in-band DDL
+        events) and per-bucket ``err_stats``/``read_stats`` (malformed and
+        valid-event counts from its one count-only job for ALL epochs), so
+        the epoch costs exactly ONE Spark job: the delta write. Direct
+        callers (streaming, flow, ``reprocess_errors``) omit them and pay a
+        DDL collect plus the same count-only job (``_bucket_counts``) for
+        this epoch first; without ``err_stats`` the malformed events are
+        also quarantined here. On both paths the remaining manifest stats —
+        events_applied, (max_op_ts, max_event_seq) watermark — are read
+        from the staged parquet FOOTERS of the delta write itself (num_rows
+        + column min/max statistics): every valid event folds into its
+        key's winner, and the winners' ``_max_seq``/``_op_ts`` maxima per
+        bucket are exactly the footer maxima of the staged columns."""
         t0 = time.monotonic()
         self._sync_buckets()
         sdef = self._apply_schema_ops(events, schema_rows=schema_rows)
@@ -407,128 +398,70 @@ class CdcEngine:
         vpred = valid_event_pred(kc, cc)
         valid = data.filter(vpred)
 
-        if err_stats is None:
-            # standalone path: one aggregation job for malformed lineage.
-            # bucket_expr is already total on null keys (xxhash64 skips null
-            # inputs); keys are CAST to their declared types before hashing
-            # because the write side buckets after _normalize_events' casts
-            # and xxhash64 hashes int vs bigint differently — a raw-typed
-            # hash would put stats in buckets the data never lands in
-            ktypes = {f["name"]: f["type"] for f in sdef.fields
-                      if f["name"] in key_cols}
-            nb = bucket_expr(key_cols, self.n_buckets, cast_types=ktypes)
-            err_stats = {
-                r["_bucket"]: r["n"] for r in
-                (data.filter(~vpred).withColumn("_bucket", nb)
-                 .groupBy("_bucket").agg(F.count(F.lit(1)).alias("n")).collect())
-            }
-            if sum(err_stats.values()) > 0:
-                self._quarantine(data.filter(~vpred), epoch)
+        if read_stats is None:
+            rows = self._bucket_counts(data, vpred, key_cols, sdef.fields)
+            read_stats = {r["_bucket"]: r["n"] for r in rows if r["_ok"]}
+            if err_stats is None:
+                err_stats = {r["_bucket"]: r["n"] for r in rows if not r["_ok"]}
+                if err_stats:
+                    self._quarantine(data.filter(~vpred), epoch)
 
         ev = self._normalize_events(valid, sdef)
 
-        # LWW winners. The same aggregation carries per-key lineage
-        # (_n_events, _max_seq), so every manifest stat — events_read,
-        # events_applied, (max_op_ts, max_event_seq) watermark — comes from
-        # the winner rows with no separate stats scan.
         winners = lww_reduce(ev, key_cols, payload_cols + ["op"],
                              salt=self._effective_salt(ev, key_cols),
                              with_stats=True)
         winners = winners.withColumn("_bucket", bucket_expr(key_cols, self.n_buckets))
+        # keep _max_seq for the footer watermark
+        delta = (winners.drop("_n_events")
+                 .withColumn("_deleted", F.col("op") == OP_DELETE).drop("op"))
 
-        if read_stats is not None and self.merge_mode == "mor":
-            # Single-job fast path: stage+commit the delta (keeping _max_seq
-            # for the footer watermark), then derive per-bucket manifests
-            # from the staged footers + precomputed read/err counts.
-            delta = (winners.drop("_n_events")
-                     .withColumn("_deleted", F.col("op") == OP_DELETE).drop("op"))
+        def manifests_from_footers(new_files: list[dict]) -> list[dict]:
+            applied, max_ts, max_seq, wbytes, wfiles = \
+                _delta_footer_stats(self.table.root, new_files,
+                                    lambda f: f["bucket"])
+            stats = {
+                b: {"_bucket": b, "events_applied": applied[b],
+                    "events_read": read_stats.get(b, 0),
+                    "max_op_ts": max_ts.get(b), "max_event_seq": max_seq.get(b),
+                    "bytes_written": wbytes[b], "files_written": wfiles[b]}
+                for b in applied
+            }
+            return self._manifest_rows(epoch, stats, err_stats, t0)
 
-            def manifests_from_footers(new_files: list[dict]) -> list[dict]:
-                applied, max_ts, max_seq, wbytes, wfiles = \
-                    _delta_footer_stats(self.table.root, new_files,
-                                        lambda f: f["bucket"])
-                stats = {
-                    b: {"_bucket": b, "events_applied": applied[b],
-                        "events_read": read_stats.get(b, 0),
-                        "max_op_ts": max_ts.get(b), "max_event_seq": max_seq.get(b),
-                        "bytes_written": wbytes[b], "files_written": wfiles[b]}
-                    for b in applied
-                }
-                return self._manifest_rows(epoch, stats, err_stats, t0)
+        snap = self.table.commit_delta(delta, epoch=epoch,
+                                       manifests=manifests_from_footers)
+        return snap.manifests
 
-            snap = self.table.commit_delta(delta, epoch=epoch,
-                                           manifests=manifests_from_footers)
-            return snap.manifests
+    def _bucket_counts(self, data: DataFrame, vpred, key_cols: list[str],
+                       fields: list[dict], *group: str) -> list:
+        """ONE count-only job: event counts per (``group``..., storage
+        bucket, ``_ok`` = passes ``vpred``) — the valid reads and malformed
+        counts the manifests need, column-pruned to the key columns + op
+        (+ ``group``), no payload. Shared by the replay loop (grouped by
+        ``checkpoint_epoch`` for all epochs of a run) and standalone
+        ``apply_epoch`` (one epoch, no epoch column required).
 
-        # Job 1 — materialize winners (persisted); ONE collect on the cache
-        # yields every per-bucket manifest stat. (An observe/CollectMetrics
-        # fusion into the write job was measured SLOWER — n_buckets×4
-        # conditional aggregates per row cost more than one cached job.)
-        # persist released in the finally: a failed stats collect or commit
-        # (concurrent-writer CAS, task failure) must not pin the cached
-        # winner set in executor memory — a long-running foreachBatch driver
-        # retrying failed microbatches would leak one cache per failure
-        winners.persist()
-        try:
-            return self._apply_epoch_committed(
-                winners, epoch, err_stats, key_cols, payload_cols, t0)
-        finally:
-            winners.unpersist()
-
-    def _apply_epoch_committed(self, winners, epoch, err_stats, key_cols,
-                               payload_cols, t0):
-        stat_rows = (winners.groupBy("_bucket")
-                     .agg(F.count(F.lit(1)).alias("events_applied"),
-                          F.sum("_n_events").alias("events_read"),
-                          F.max("_op_ts").alias("max_op_ts"),
-                          F.max("_max_seq").alias("max_event_seq"))
-                     .collect())
-        read_stats = {r["_bucket"]: r for r in stat_rows}
-        touched = sorted(read_stats)
-        manifests = self._manifest_rows(epoch, read_stats, err_stats, t0)
-
-        mode = self.merge_mode
-        if mode == "mor":
-            # Job 2 (merge-on-read, default — the 10^10-event shape): append
-            # the winner set as bucket-tagged DELTA files — O(epoch) write,
-            # no table rewrite. Reads LWW-fold base+deltas; compact()
-            # re-bases. DELETE winners become tombstone rows — they must keep
-            # out-versioning late duplicate redeliveries of older events in
-            # future epochs (exactly-once under at-least-once delivery).
-            delta = (winners.drop("_n_events", "_max_seq")
-                     .withColumn("_deleted", F.col("op") == OP_DELETE).drop("op"))
-            self.table.commit_delta(delta, epoch=epoch, manifests=manifests)
-            return manifests
-
-        # Job 2 (copy-on-write): rewrite touched buckets as merged base files.
-        base = (self.table.read(self.spark, buckets=touched, with_internal_cols=True)
-                .withColumn("op", F.when(F.col("_deleted"), F.lit(OP_DELETE))
-                                   .otherwise(F.lit(OP_UPDATE)))
-                .drop("_deleted")
-                .withColumn("_bucket", bucket_expr(key_cols, self.n_buckets)))
-        union = base.unionByName(winners.drop("_n_events", "_max_seq"))
-        if mode == "cow-arrow":
-            # single-shuffle: shuffle by storage bucket (pure function of
-            # the key), Arrow-batched in-partition fold
-            merged = lww_reduce_in_partition(
-                union.repartition(max(len(touched), 1), "_bucket"), key_cols)
-            pre_part = True
-        else:  # cow-jvm
-            merged = lww_reduce(union, key_cols, payload_cols + ["op"])
-            merged = merged.withColumn("_bucket", bucket_expr(key_cols, self.n_buckets))
-            pre_part = False
-        merged = merged.withColumn("_deleted", F.col("op") == OP_DELETE).drop("op")
-        self.table.commit_merge(merged, touched, epoch=epoch, manifests=manifests,
-                                pre_partitioned=pre_part)
-        return manifests
+        bucket_expr is total on null keys (xxhash64 skips nulls); keys are
+        CAST to their declared types in ``fields`` so these counts bucket
+        exactly like the normalized winners (raw event files may carry
+        narrower physical types, and xxhash64 hashes int vs bigint
+        differently — see bucket_expr's cast_types contract). Key TYPES are
+        stable across the stream: widening a key would change the whole
+        storage bucketing and requires an explicit re-bucket."""
+        ktypes = {f["name"]: f["type"] for f in fields if f["name"] in key_cols}
+        nb = bucket_expr(key_cols, self.n_buckets, cast_types=ktypes)
+        return (data.withColumn("_bucket", nb).withColumn("_ok", vpred)
+                .groupBy(*group, "_bucket", "_ok")
+                .agg(F.count(F.lit(1)).alias("n")).collect())
 
     def apply_epoch_group(self, events: DataFrame, epochs: list[int],
                           err_by_epoch: dict[int, dict[int, int]],
                           read_by_epoch: dict[int, dict[int, int]],
                           schema_rows: list | None = None) -> list[dict]:
         """GROUP COMMIT: apply several epochs in ONE Spark job + ONE atomic
-        snapshot (merge-on-read only; ``events`` must carry
-        ``checkpoint_epoch`` restricted to ``epochs``).
+        snapshot (``events`` must carry ``checkpoint_epoch`` restricted
+        to ``epochs``).
 
         Every Spark job pays a constant planning/scheduling cost that doesn't
         parallelize — measured ~1.2s/epoch at local[4] on the 20M-event
@@ -608,11 +541,6 @@ class CdcEngine:
         rows = []
         for b in sorted(set(read_stats) | set(err_stats)):
             rs = read_stats.get(b)
-            if rs is not None and not isinstance(rs, dict):
-                # the CoW stats path collects Spark Rows; the MOR footer
-                # path builds dicts — normalize so the optional
-                # write-volume keys can default uniformly
-                rs = rs.asDict()
             rows.append({
                 "checkpoint_epoch": epoch, "partition_id": b,
                 "events_read": int(rs["events_read"]) if rs else 0,
@@ -621,12 +549,11 @@ class CdcEngine:
                 "max_op_ts": int(rs["max_op_ts"]) if rs and rs["max_op_ts"] is not None else -1,
                 "max_event_seq": int(rs["max_event_seq"]) if rs and rs["max_event_seq"] is not None else -1,
                 "wall_ms": wall_ms,
-                # write-amplification lineage: bytes/files this epoch's MOR
-                # delta commit staged for the partition (0 on rows whose
-                # commit path doesn't stage per-bucket deltas: quarantine-
-                # only buckets, copy-on-write modes, initial load)
-                "bytes_written": int(rs.get("bytes_written", 0)) if rs else 0,
-                "files_written": int(rs.get("files_written", 0)) if rs else 0,
+                # write-amplification lineage: bytes/files this epoch's
+                # delta commit staged for the partition (0 on quarantine-
+                # only buckets)
+                "bytes_written": int(rs["bytes_written"]) if rs else 0,
+                "files_written": int(rs["files_written"]) if rs else 0,
             })
         return rows
 
@@ -870,29 +797,19 @@ class CdcEngine:
             schema_by_epoch[r["checkpoint_epoch"]].append(r)
 
         # One count-only scan for ALL epochs' lineage pre-stats (valid reads
-        # AND malformed counts per bucket — column-pruned to key cols + op +
-        # epoch, no payload). Malformed-ness is state-independent, so DLQ
-        # routing doesn't need to ride inside the per-epoch loop either.
-        # Dynamic partition overwrite keeps re-runs idempotent without
-        # clobbering other epochs' DLQ. With these in hand each MOR epoch
-        # costs exactly ONE Spark job (see apply_epoch read_stats path).
+        # AND malformed counts per bucket). Malformed-ness is
+        # state-independent, so DLQ routing doesn't need to ride inside the
+        # per-epoch loop either. Dynamic partition overwrite keeps re-runs
+        # idempotent without clobbering other epochs' DLQ. With these in
+        # hand each epoch costs exactly ONE Spark job (apply_epoch with
+        # read_stats).
         key_cols = self._key_cols()
         kc, cc = self._pred_args(events)
         vpred = valid_event_pred(kc, cc)
-        # bucket_expr is total on null keys (xxhash64 skips nulls); keys
-        # CAST to their declared types so these stats bucket exactly like
-        # the normalized winners (raw event files may carry narrower
-        # physical types — see bucket_expr's cast_types contract). Key
-        # TYPES are stable across the stream: widening a key would change
-        # the whole storage bucketing and requires an explicit re-bucket
-        ktypes = {f["name"]: f["type"]
-                  for f in self.table.latest_meta().fields
-                  if f["name"] in key_cols}
-        nb = bucket_expr(key_cols, self.n_buckets, cast_types=ktypes)
         data = scope.filter(~F.coalesce(F.col("op"), F.lit(-1)).isin(*SCHEMA_OPS))
-        stat_rows = (data.withColumn("_bucket", nb).withColumn("_ok", vpred)
-                     .groupBy("checkpoint_epoch", "_bucket", "_ok")
-                     .agg(F.count(F.lit(1)).alias("n")).collect())
+        stat_rows = self._bucket_counts(data, vpred, key_cols,
+                                        self.table.latest_meta().fields,
+                                        "checkpoint_epoch")
         err_by_epoch: dict[int, dict[int, int]] = {e: {} for e in todo}
         read_by_epoch: dict[int, dict[int, int]] = {e: {} for e in todo}
         n_err = 0
@@ -912,14 +829,13 @@ class CdcEngine:
         # (apply_epoch_group). A DDL-carrying epoch starts a new group (its
         # DDL must apply before its own and all later data); compact_every
         # caps group length so the compaction cadence — and thus the delta
-        # fold depth bound — is preserved. Only the merge-on-read mode has a
-        # grouped path; cow modes stay per-epoch.
+        # fold depth bound — is preserved.
         groups: list[list[int]] = []
         cur: list[int] = []
         cap = compact_every or len(todo)
         for e in todo:
             if cur and (schema_by_epoch[e] or len(cur) >= cap
-                        or not (group_commit and self.merge_mode == "mor")):
+                        or not group_commit):
                 groups.append(cur)
                 cur = []
             cur.append(e)
@@ -1067,10 +983,6 @@ class CdcEngine:
 
     # ------------------------------------------------------------------- reads
     def read_final(self, columns: list[str] | None = None) -> DataFrame:
-        # the JVM shuffle fold, not table.read_aligned: measured at local[N]
-        # the exchange is an in-memory copy and always beats the aligned
-        # path's Python->JVM Arrow transfer (see read_aligned's docstring
-        # for the numbers and the cluster regime where that flips).
         # ``columns`` prunes the projection into the scan (a .select on the
         # result cannot — the MOR fold blocks Catalyst column pruning).
         return self.table.read(self.spark, columns=columns)
@@ -1094,8 +1006,8 @@ class CdcEngine:
         """Per-(epoch, partition) lineage ledger. ``bytes_written`` /
         ``files_written`` are the MOR delta commit's staged write volume —
         the write-amplification signal an operator trends against
-        ``events_applied`` to size ``compact_every`` (0 on copy-on-write /
-        initial-load / quarantine-only rows)."""
+        ``events_applied`` to size ``compact_every`` (0 on initial-load /
+        quarantine-only rows)."""
         # default the write-volume fields: manifests committed by older
         # builds (or hand-written in tests) may predate them
         rows = [{"bytes_written": 0, "files_written": 0, **r}

@@ -280,22 +280,18 @@ class IcebergSnapshotTable:
         return int(row[0]["snapshot_id"]) if row else None
 
     def commit_delta(self, df: DataFrame, epoch: int | None,
-                     manifests, pre_partitioned: bool = False,
-                     base=None) -> _IcebergCommit:
+                     manifests, base=None) -> _IcebergCommit:
         """MOR delta: one atomic append snapshot, epoch + manifest rows in
         the snapshot summary (Transaction.newAppend + summary props).
-        ``pre_partitioned`` is accepted for signature parity; Iceberg's
-        fanout writer makes the pre-shuffle an optimization, not a
-        requirement. ``base`` (the lake's optimistic-concurrency pin) is
-        accepted for parity and unused: Iceberg's commit loop retries
-        appends against the fresh head natively (``commit.retry.*``), the
-        exact behavior ``SnapshotTable``'s delta rebase reimplements."""
+        ``base`` (the lake's optimistic-concurrency pin) is accepted for
+        parity and unused: Iceberg's commit loop retries appends against
+        the fresh head natively (``commit.retry.*``), the exact behavior
+        ``SnapshotTable``'s delta rebase reimplements."""
         self._writer(df, epoch, manifests).append()
         return _IcebergCommit(self._last_snapshot_id(), epoch, manifests)
 
     def commit_delta_grouped(self, df: DataFrame, epochs: list[int],
-                             manifests, pre_partitioned: bool = False,
-                             base=None) -> _IcebergCommit:
+                             manifests, base=None) -> _IcebergCommit:
         """Group-commit MOR: several epochs' winners in ONE append snapshot;
         per-epoch committedness is recovered from the manifest rows'
         ``checkpoint_epoch`` (same fold rule as SnapshotTable)."""
@@ -308,7 +304,6 @@ class IcebergSnapshotTable:
                      new_fields: list[dict] | None = None,
                      new_aliases: dict | None = None,
                      props: dict | None = None,
-                     pre_partitioned: bool = False,
                      n_buckets: int | None = None,
                      maintenance: bool = False,
                      sort_cols: list[str] | None = None,

@@ -30,9 +30,6 @@ Tie-break totality: the version struct compares ``op_ts`` first then
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -125,59 +122,3 @@ def lww_reduce_adaptive(events: DataFrame, key_cols: list[str],
     salt = choose_lww_salt(events, key_cols, **probe_kwargs)
     return lww_reduce(events, key_cols, payload_cols, salt=salt,
                       with_stats=with_stats)
-
-
-def lww_reduce_in_partition(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Per-partition LWW reduce via an Arrow-batched incremental fold.
-
-    Requires every row of a key to live in one partition (e.g. after
-    ``repartition(n, "_bucket")`` where ``_bucket`` is a pure function of the
-    key). This replaces the second full-table shuffle of the merge path: the
-    union of target-state and epoch winners is shuffled ONCE by storage
-    bucket and reduced in place, so the MERGE is a single-shuffle job.
-
-    The fold is associative: each Arrow batch is concatenated with the
-    winners-so-far and re-reduced, bounding memory at O(distinct keys in
-    partition) instead of O(partition).
-
-    mapInArrow + ArrowDtype-backed pandas, NOT plain mapInPandas: the
-    default Arrow→pandas conversion turns an int64 column containing ANY
-    null into float64 (numpy has no nullable int), silently rounding values
-    ≥ 2^53 on the way through — and a schema evolution that ADDs a bigint
-    column guarantees nulls in old base rows, so after one evolution every
-    cow-arrow merge would corrupt snowflake-scale ids while the max_by
-    paths return them exactly. ArrowDtype columns keep the original Arrow
-    buffers (and exact int64) end to end — the same reason the Avro codec
-    uses mapInArrow.
-    """
-    cols = df.columns
-    schema = df.schema
-
-    def reduce_partition(batches):
-        import pyarrow as pa
-        acc = None
-        in_schema = None
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            if in_schema is None:
-                in_schema = b.schema
-            pdf = (pa.Table.from_batches([b])
-                   .to_pandas(types_mapper=pd.ArrowDtype))
-            both = pdf if acc is None else pd.concat([acc, pdf],
-                                                     ignore_index=True)
-            # na_position='first' + dropna=False: pandas sorts NA LAST and
-            # drops null group keys by default — either would silently make
-            # this fold diverge from Spark's max_by (null version loses,
-            # null keys form their own group) on the other merge paths.
-            # (SnapshotTable.read_aligned's pure-Arrow fold mirrors the same
-            # two rules; read-vs-read_aligned equality tests pin them.)
-            both = both.sort_values(["_op_ts", "_event_seq"], kind="stable",
-                                    na_position="first")
-            acc = (both.groupby(key_cols, as_index=False, sort=False,
-                                dropna=False).tail(1))
-        if acc is not None:
-            out = pa.Table.from_pandas(acc[cols], preserve_index=False)
-            yield from out.cast(in_schema).to_batches()
-
-    return df.mapInArrow(reduce_partition, schema=schema)

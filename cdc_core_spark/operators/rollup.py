@@ -34,10 +34,11 @@ re-scanning the base table per refresh:
   itself is persisted in table props, so ``load()`` needs no re-declaration.
 * **MOR upstream required.** ``read_changes`` raises on logical
   copy-on-write rewrites by design (their changes are folded into rewritten
-  base files and cannot be recovered incrementally) — commit upstream
-  logical changes in ``merge_mode='mor'``; maintenance rewrites
-  (compaction, re-bucket, tombstone expiry) are state-preserving and skip
-  cleanly mid-range.
+  base files and cannot be recovered incrementally) — the remaining sources
+  are docstore upserts and direct ``commit_merge(epoch=...)`` calls;
+  ``CdcEngine`` epochs always commit merge-on-read deltas. Maintenance
+  rewrites (compaction, re-bucket, tombstone expiry) are state-preserving
+  and skip cleanly mid-range.
 
 Reference parity: the derived-state shape mirrors the reference's
 DataStore-backed summary entities recomputed per pipeline run

@@ -59,21 +59,19 @@ def test_salted_equals_unsalted(spark):
 
 
 def test_in_partition_fold_matches_maxby_on_nulls(spark):
-    """cow-arrow's pandas fold must agree with Spark max_by semantics: a
-    null version LOSES (nulls-first sort) and null-key rows survive as
-    their own group (dropna=False)."""
-    from cdc_core_spark.lww import lww_reduce, lww_reduce_in_partition
-
+    """The max_by null semantics any fold must match: a null version LOSES,
+    null-key rows survive as their own group, and a winner's OWN null
+    payload is kept (never back-filled from an older version of the key)."""
     ddl = ("k string, payload string, _op_ts long, _event_seq long, "
            "_deleted boolean")
     rows = [("a", "old", 5, 1, False), ("a", "nullver", None, None, False),
-            (None, "nullkey", 7, 2, False)]
+            (None, "nullkey", 7, 2, False),
+            ("b", "old", 1, 3, False), ("b", None, 2, 4, False)]
     df = spark.createDataFrame(rows, ddl).repartition(1)
-    folded = {r["k"]: r["payload"]
-              for r in lww_reduce_in_partition(df, ["k"]).collect()}
-    viaagg = {r["k"]: r["payload"]
-              for r in lww_reduce(df, ["k"], ["payload", "_deleted"]).collect()}
-    assert folded == viaagg == {"a": "old", None: "nullkey"}
+    got = {r["k"]: r["payload"]
+           for r in lww_reduce(df, ["k"], ["payload", "_deleted"]).collect()}
+    assert got == {"a": "old", None: "nullkey", "b": None}
+
 
 def test_adaptive_salt_probe_and_equivalence(spark):
     """choose_lww_salt: a dominant hot key (>= threshold share) triggers
@@ -104,23 +102,3 @@ def test_adaptive_salt_probe_and_equivalence(spark):
                lww_reduce_adaptive(df, ["repo", "path"], ["v"],
                                    **kw).collect()}
         assert got == want
-
-
-def test_lww_in_partition_exact_bigints_past_2_53_with_nulls(spark):
-    """The cow-arrow fold must not round int64 values >= 2^53: the default
-    Arrow->pandas conversion coerces a nullable int64 column to float64
-    (numpy has no nullable int), and a post-evolution base always carries
-    nulls in the added column. ArrowDtype keeps the exact buffers."""
-    from cdc_core_spark.lww import lww_reduce_in_partition
-
-    big = (1 << 53) + 1            # not representable as float64
-    rows = [("r", "a", None, 100, 1),
-            ("r", "a", big, 200, 2),      # winner carries the huge id
-            ("r", "b", big + 2, 50, 3)]
-    df = (spark.createDataFrame(
-              rows, "repo string, path string, ext_id long, "
-                    "_op_ts long, _event_seq long")
-          .repartition(2, "repo", "path"))
-    got = {(r["repo"], r["path"]): r["ext_id"]
-           for r in lww_reduce_in_partition(df, ["repo", "path"]).collect()}
-    assert got == {("r", "a"): big, ("r", "b"): big + 2}

@@ -187,28 +187,34 @@ def test_read_changes_rebuilds_state_incrementally(spark, t1, registry, tmp_path
 
 
 def test_read_changes_raises_on_logical_rewrite(spark, t1, registry, tmp_path):
-    """A copy-on-write engine epoch commits a rewrite WITH an epoch: its
-    changes are folded into rewritten base files, so silently skipping it
-    (the pre-fix behavior) would lose data for every CDC-out consumer.
-    Default now raises with remediation; on_logical_rewrite='skip' is the
-    explicit opt-out; a pure-maintenance rewrite (compact, epoch=None)
-    still skips silently."""
+    """A copy-on-write commit WITH an epoch (here a direct
+    ``commit_merge(epoch=...)``; docstore upserts are the other source —
+    engine epochs are always merge-on-read) folds its changes into
+    rewritten base files, so silently skipping it would lose data for
+    every CDC-out consumer. Default raises with remediation;
+    on_logical_rewrite='skip' is the explicit opt-out."""
     import pytest
 
-    from cdc_core_spark.lake import ChangelogCursor
+    from cdc_core_spark.lake import ChangelogCursor, bucket_expr
 
-    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8,
-                    merge_mode="cow-jvm")
+    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8)
     src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
     eng.replay(f'{t1["dir"]}/change_events', source_df=src, epochs=[0, 1])
     t = eng.table
-    base_v = t.latest().version
-    eng.replay(f'{t1["dir"]}/change_events', epochs=[2, 3])
+    snap = t.latest()
+    base_v = snap.version
+    touched = [0, 1]
+    rewrite = (t.read(spark, buckets=touched, with_internal_cols=True,
+                      snap=snap)
+               .withColumn("content", F.lit("rewritten"))
+               .withColumn("_bucket", bucket_expr(snap.key_cols, 8)))
+    t.commit_merge(rewrite, touched, epoch=2, manifests=[], base=snap)
 
-    with pytest.raises(ValueError, match="LOGICAL rewrite"):
+    msg = "LOGICAL rewrite.*CdcEngine epochs are always merge-on-read"
+    with pytest.raises(ValueError, match=msg):
         t.read_changes(spark, base_v)
     cur = ChangelogCursor(t, from_version=base_v)
-    with pytest.raises(ValueError, match="LOGICAL rewrite"):
+    with pytest.raises(ValueError, match=msg):
         cur.poll(spark)
     # explicit opt-out skips (consumer re-reads full state across it)
     assert t.read_changes(spark, base_v,

@@ -1,18 +1,15 @@
-"""SnapshotTable.read_aligned — the shuffle-free bucket-aligned MOR fold.
+"""Read-side checks of the merge-on-read fold (``SnapshotTable.read``).
 
-Equality with the Catalyst ``read`` path is the whole contract: the t1
-replay history exercises schema evolution (ADD + RENAME + WIDEN across
-1.0→2.1), tombstones, and multi-epoch delta layers, so row-for-row
-equality here pins the Arrow-side projection (``_arrow_projection``) and
-the pure-Arrow fold against ``field_projection`` + ``lww_reduce``.
+The t1 replay history exercises schema evolution (ADD + RENAME + WIDEN
+across 1.0→2.1), tombstones and multi-epoch delta layers, so it pins the
+projected read (``columns=``), the keys-only ``count_final`` fold and the
+rule that a winner's own null payload survives the fold.
 """
 from __future__ import annotations
 
-import pyarrow as pa
 import pytest
 
 from cdc_core_spark.engine import CdcEngine
-from cdc_core_spark.lake import _arrow_projection
 
 
 @pytest.fixture(scope="module")
@@ -31,83 +28,9 @@ def _assert_df_equal(a, b):
     assert b.exceptAll(a).count() == 0
 
 
-def test_equals_shuffle_fold(spark, replayed):
-    _assert_df_equal(replayed.table.read(spark),
-                     replayed.table.read_aligned(spark))
-
-
-def test_equals_with_internal_cols(spark, replayed):
-    # internal cols expose tombstones + versions: equality here proves the
-    # fold kept the same winner VERSION per key, not just the same payload
-    _assert_df_equal(replayed.table.read(spark, with_internal_cols=True),
-                     replayed.table.read_aligned(spark, with_internal_cols=True))
-
-
-def test_equals_bucket_pruned(spark, replayed):
-    _assert_df_equal(replayed.table.read(spark, buckets=[0, 3]),
-                     replayed.table.read_aligned(spark, buckets=[0, 3]))
-    # empty selection
-    got = replayed.table.read_aligned(spark, buckets=[999])
-    assert got.count() == 0
-
-
-def test_no_shuffle_in_plan(spark, replayed):
-    plan = (replayed.table.read_aligned(spark)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan, plan
-    shuffled = (replayed.table.read(spark)
-                ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" in shuffled  # the path being avoided
-
-
-def test_compacted_falls_back_to_plain_scan(spark, t1, registry, tmp_path):
-    eng = CdcEngine(spark, str(tmp_path / "c"), registry, n_buckets=8)
-    src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
-    eng.replay(f'{t1["dir"]}/change_events', source_df=src)
-    before = eng.table.read_aligned(spark).toPandas()
-    eng.compact()
-    after_df = eng.table.read_aligned(spark)
-    plan = after_df._jdf.queryExecution().executedPlan().toString()
-    # no delta layers left -> the vectorized JVM scan, no Python stage
-    assert "MapInArrow" not in plan and "ArrowEvalPython" not in plan
-    after = after_df.toPandas()
-    key = ["repo", "path"]
-    assert (before.sort_values(key).reset_index(drop=True)[sorted(before.columns)]
-            .equals(after.sort_values(key).reset_index(drop=True)[sorted(after.columns)]))
-
-
-def test_arrow_projection_mirrors_field_projection():
-    """Unit pin of the worker-side projection: rename via alias, null-fill
-    missing, widen int->long, reject illegal casts loudly."""
-    fields = [{"name": "repo", "type": "string"},
-              {"name": "size_bytes", "type": "long"},
-              {"name": "lang", "type": "string"}]
-    aliases = {"language": "lang"}
-    tab = pa.table({
-        "repo": pa.array(["a", "b"]),
-        "size_bytes": pa.array([1, 2], type=pa.int32()),   # narrow writer
-        "language": pa.array(["go", None]),                # pre-rename name
-        "_op_ts": pa.array([10, 20], type=pa.int64()),
-        "_event_seq": pa.array([1, 2], type=pa.int64()),
-        # _deleted missing entirely -> filled False
-    })
-    out = _arrow_projection(tab, fields, aliases)
-    assert out.schema.names == ["repo", "size_bytes", "lang",
-                                "_op_ts", "_event_seq", "_deleted"]
-    assert out.column("size_bytes").type == pa.int64()
-    assert out.column("lang").to_pylist() == ["go", None]
-    assert out.column("_deleted").to_pylist() == [False, False]
-
-    bad = pa.table({"repo": pa.array(["a"]),
-                    "size_bytes": pa.array(["7"]),          # string->long: no
-                    "lang": pa.array(["go"])})
-    with pytest.raises(ValueError, match="not a legal schema widening"):
-        _arrow_projection(bad, fields, aliases)
-
-
 def test_fold_keeps_null_payload_of_winner(spark, registry, tmp_path):
-    """The winner's OWN null must survive: pyarrow's 'last' aggregation
-    default (skip_nulls=True) would resurrect the older non-null value."""
+    """The winner's OWN null must survive the fold: back-filling the older
+    non-null value of the key would resurrect overwritten data."""
     import pandas as pd
     from cdc_core_spark.lake import SnapshotTable
 
@@ -126,21 +49,18 @@ def test_fold_keeps_null_payload_of_winner(spark, registry, tmp_path):
     t.commit_delta(mk([{"repo": "r", "path": "p", "content": None,
                         "_op_ts": 2, "_event_seq": 2, "_deleted": False,
                         "_bucket": 0}]), epoch=1, manifests=[])
-    got = t.read_aligned(spark).toPandas()
+    got = t.read(spark).toPandas()
     assert len(got) == 1
     assert got["content"].isna().all()   # null wins, not "old"
-    want = t.read(spark).toPandas()
-    assert want["content"].isna().all()
 
 
 def test_columns_projection_pruned_and_equal(spark, replayed):
     """``columns=`` must (a) return values identical to a post-hoc select on
     the full read — across the evolved ADD+RENAME+WIDEN history, so the
-    restricted fields list still drives alias/widen normalization — on BOTH
-    fold paths, and (b) actually prune the Spark scan: the MOR fold's
-    max_by struct blocks Catalyst column pruning, which is the whole reason
-    the parameter exists, so ReadSchema must not contain the unprojected
-    wide column."""
+    restricted fields list still drives alias/widen normalization — and
+    (b) actually prune the Spark scan: the MOR fold's max_by struct blocks
+    Catalyst column pruning, which is the whole reason the parameter
+    exists, so ReadSchema must not contain the unprojected wide column."""
     import re
 
     t = replayed.table
@@ -148,7 +68,6 @@ def test_columns_projection_pruned_and_equal(spark, replayed):
     full = t.read(spark).select(*cols)
     proj = t.read(spark, columns=cols)
     _assert_df_equal(full, proj)
-    _assert_df_equal(proj, t.read_aligned(spark, columns=cols))
 
     plan = proj._jdf.queryExecution().executedPlan().toString()
     schemas = re.findall(r"ReadSchema: (\S+)", plan)

@@ -136,18 +136,6 @@ def test_manifest_stats_survive_narrow_key_types(spark, tmp_path):
     assert got == {7: "v1", 9: "v2"}
 
 
-def test_merge_mode_validated_at_construction(spark, tmp_path, monkeypatch):
-    """A typo'd CDC_MERGE_STRATEGY must fail at engine construction, not
-    silently run every epoch as a copy-on-write rewrite."""
-    import pytest
-
-    with pytest.raises(ValueError, match="mor-delta"):
-        CdcEngine(spark, str(tmp_path / "x"), None, merge_mode="mor-delta")
-    monkeypatch.setenv("CDC_MERGE_STRATEGY", "MOR")
-    with pytest.raises(ValueError, match="MOR"):
-        CdcEngine(spark, str(tmp_path / "y"), None)
-
-
 def test_null_op_quarantined_consistently(spark, tmp_path):
     """A null op must land in the DLQ AND the error count — on both the
     standalone apply_epoch path and the replay fast path (the predicate is
@@ -195,6 +183,15 @@ def test_null_op_quarantined_consistently(spark, tmp_path):
     a = sorted(tuple(r) for r in eng.read_final().collect())
     b = sorted(tuple(r) for r in eng2.read_final().collect())
     assert a == b
+    # and so are the logical manifests: standalone apply_epoch counts its
+    # lineage with the same count-only job the replay loop runs
+    logical = ["checkpoint_epoch", "partition_id", "events_read",
+               "events_applied", "events_error", "max_op_ts", "max_event_seq"]
+
+    def epoch0(e):
+        return sorted(tuple(r) for r in e.manifests_df()
+                      .filter("checkpoint_epoch = 0").select(logical).collect())
+    assert epoch0(eng) and epoch0(eng) == epoch0(eng2)
 
 
 def test_manifest_lineage(spark, t1, registry, tmp_path):
@@ -219,7 +216,12 @@ def test_mor_epoch_is_one_spark_job(spark, t1, registry, tmp_path):
     """PERF CONTRACT: with pre-computed stats, a merge-on-read epoch costs
     exactly ONE Spark job (the staged delta write; manifests come from
     parquet footers). Guards the engine's headline scaling property against
-    regressions that sneak extra jobs into the epoch loop."""
+    regressions that sneak extra jobs into the epoch loop.
+
+    Without stats (streaming, flow, reprocess_errors) a clean DDL-free
+    epoch takes the same footer-derived single write, preceded only by the
+    DDL collect (its orderBy samples range bounds first: 2 jobs) and one
+    count-only job: 4 jobs."""
     from pyspark.sql import functions as F
 
     eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8)
@@ -236,19 +238,29 @@ def test_mor_epoch_is_one_spark_job(spark, t1, registry, tmp_path):
     read_stats = {r["_b"]: r["count"] for r in stats}
 
     sc = spark.sparkContext
-    # AQE splits one action into a job per shuffle stage; count ACTIONS by
-    # disabling it for the window (the contract is one action per epoch)
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sc.setJobGroup("one_job_epoch", "epoch apply", False)
-    try:
-        eng.apply_epoch(batch, 0, err_stats={}, schema_rows=[],
-                        read_stats=read_stats)
-        jobs = sc.statusTracker().getJobIdsForGroup("one_job_epoch")
-    finally:
-        sc.setJobGroup(None, None, False)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+
+    def jobs_of(group, apply):
+        # AQE splits one action into a job per shuffle stage; count ACTIONS
+        # by disabling it for the window (the contract is per action)
+        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        sc.setJobGroup(group, "epoch apply", False)
+        try:
+            apply()
+            return sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setJobGroup(None, None, False)
+            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+
+    jobs = jobs_of("one_job_epoch", lambda: eng.apply_epoch(
+        batch, 0, err_stats={}, schema_rows=[], read_stats=read_stats))
     assert len(jobs) == 1, f"epoch took {len(jobs)} jobs: {jobs}"
+
+    # standalone: epoch 1's valid data events — no DDL, nothing to quarantine
+    clean = (events.filter(F.col("checkpoint_epoch") == 1)
+             .filter(valid_event_pred(kc)))
+    jobs = jobs_of("no_stats_epoch", lambda: eng.apply_epoch(clean, 1))
+    assert len(jobs) == 4, f"standalone epoch took {len(jobs)} jobs: {jobs}"
 
 
 def test_errors_df_clean_run_schema(spark, t1, registry, tmp_path):
@@ -355,10 +367,7 @@ def test_manifest_write_volume_matches_staged_bytes(spark, t1, registry,
     MOR-delta write volume: their totals must equal the byte/file counts of
     the delta files the snapshot references (write-amplification lineage an
     operator trends against events_applied to size compact_every)."""
-    # merge_mode pinned: the assertion requires delta files, and the suite
-    # supports running under CDC_MERGE_STRATEGY=cow-jvm/cow-arrow
-    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8,
-                    merge_mode="mor")
+    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8)
     src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
     eng.replay(f'{t1["dir"]}/change_events', source_df=src)
 

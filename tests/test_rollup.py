@@ -51,8 +51,7 @@ def test_rollup_tracks_engine_replay_per_epoch(spark, t1, registry, tmp_path):
     """Refresh after EVERY epoch of the t1 replay (through the add-column,
     rename and int→long widen DDLs) and compare against the direct
     aggregate each time — the incremental state never drifts."""
-    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8,
-                    merge_mode="mor")
+    eng = CdcEngine(spark, str(tmp_path / "e"), registry, n_buckets=8)
     src = spark.read.parquet(f'{t1["dir"]}/source_repos.parquet')
     eng.replay(f'{t1["dir"]}/change_events', source_df=src, epochs=[])
     roll = IncrementalRollup.create(spark, eng.table, str(tmp_path / "r"),
@@ -163,8 +162,8 @@ def test_rollup_cow_upstream_raises(spark, tmp_path):
     refresh must surface read_changes' error, not silently lose changes."""
     t = _mk_src(spark, str(tmp_path / "s"), [(1, "a", 10, False)], ts=100)
     r = IncrementalRollup.create(spark, t, str(tmp_path / "r"), ["g"], SPEC5)
-    # a cow engine epoch rewrites the touched buckets' base files: rewrite
-    # EVERY bucket so the commit genuinely removes files (a merge that only
+    # a logical copy-on-write commit rewrites the touched buckets' base
+    # files: rewrite EVERY bucket so the commit genuinely removes files (a merge that only
     # adds files is a pure-additive append and stays incrementally readable)
     df = _rows(spark, [(1, "a", 10, False), (2, "a", 3, False)], 200)
     t.commit_merge(df, touched_buckets=[0, 1, 2, 3],
